@@ -23,6 +23,10 @@ EncodedByteAlign); ``g3_2d_decode`` — mixed-2D Group 3, T.4 K > 0
 framed lines sharing the G4 mode decoder. Byte-flipped ``/BlackIs1``
 rasters remain the callers' documented seam.
 
+Bits come from the shared MSB-first ``sources/bits.BitReader``: codes
+are matched against a 14-bit ``peek`` and then consumed, and each
+public decoder turns the reader's ``BitstreamError`` into its None.
+
 The code tables are transcribed from ITU-T T.4 Tables 2/3 (terminating
 and make-up codes) and the shared extended make-up set; the pytest
 suite round-trips against an independent from-the-spec encoder, and a
@@ -35,6 +39,8 @@ from __future__ import annotations
 from bisect import bisect_right
 
 import numpy as np
+
+from data_ingestion_py_spark.sources.bits import BitReader, BitstreamError
 
 # (run_length, bits_as_string) — ITU-T T.4 Table 2 (white) / 3 (black)
 _WHITE_CODES = [
@@ -134,52 +140,19 @@ _WHITE_TREE = _build_tree(_WHITE_CODES + _EXT_CODES)
 _BLACK_TREE = _build_tree(_BLACK_CODES + _EXT_CODES)
 
 
-class _Bits:
-    __slots__ = ("data", "pos", "n")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.n = len(data) * 8
-
-    def read1(self) -> int | None:
-        if self.pos >= self.n:
-            return None
-        b = (self.data[self.pos >> 3] >> (7 - (self.pos & 7))) & 1
-        self.pos += 1
-        return b
-
-    def peek(self, k: int) -> int | None:
-        """k bits MSB-first, zero-padded past EOF (None only when the
-        stream is fully exhausted)."""
-        if self.pos >= self.n:
-            return None
-        v = 0
-        for i in range(k):
-            p = self.pos + i
-            bit = (
-                (self.data[p >> 3] >> (7 - (p & 7))) & 1
-                if p < self.n
-                else 0
-            )
-            v = (v << 1) | bit
-        return v
-
-
-def _read_run(bits: _Bits, white: bool) -> int | None:
+def _read_run(bits: BitReader, white: bool) -> int | None:
     """One T.4 run length: make-up codes accumulate until a
-    terminating (<64) code arrives."""
+    terminating (<64) code arrives. None on a code not in the table."""
     total = 0
     for _ in range(16):  # ≥2560/64 make-ups would be corrupt anyway
         node = _WHITE_TREE if white else _BLACK_TREE
-        for _depth in range(14):
-            b = bits.read1()
-            if b is None:
-                return None
-            nxt = node.get(b)
+        head = bits.peek(14)  # longer than any code
+        for depth in range(13, -1, -1):
+            nxt = node.get((head >> depth) & 1)
             if nxt is None:
                 return None
             if isinstance(nxt, tuple):
+                bits.skip(14 - depth)
                 run = nxt[1]
                 total += run
                 if run < 64:
@@ -208,39 +181,23 @@ def g3_1d_decode(
     row-count mismatch."""
     if columns <= 0 or columns > 1 << 16:
         return None
-    bits = _Bits(data)
+    bits = BitReader(data)
     out: list[np.ndarray] = []
     max_rows = rows if rows is not None else 1 << 20
-    while len(out) < max_rows:
-        if byte_align and bits.pos % 8:
-            bits.pos += 8 - bits.pos % 8
-        while allow_eol and bits.peek(12) == 0b000000000001:
-            bits.pos += 12
-        if bits.pos >= bits.n:
-            break
-        first_partial = (
-            bits.data[bits.pos >> 3] & (0xFF >> (bits.pos & 7))
-            if bits.pos < bits.n
-            else 0
-        )
-        if first_partial == 0 and not any(
-            bits.data[(bits.pos >> 3) + 1 :]
-        ):
-            break  # zero padding after the last line
-        line = np.full(columns, 255, np.uint8)
-        total = 0
-        white = True
-        while total < columns:
-            run = _read_run(bits, white)
-            if run is None:
+    try:
+        while len(out) < max_rows:
+            if byte_align:
+                bits.align()
+            while allow_eol and bits.peek(12) == 0b000000000001:
+                bits.skip(12)
+            if bits.rest_is_zero():
+                break  # zero padding after the last line
+            cur = _decode_1d_line(bits, columns)
+            if cur is None:
                 return None
-            if total + run > columns:
-                return None
-            if not white:
-                line[total : total + run] = 0
-            total += run
-            white = not white
-        out.append(line)
+            out.append(_render_line(cur, columns))
+    except BitstreamError:
+        return None
     if rows is not None and len(out) != rows:
         return None
     if not out:
@@ -257,32 +214,26 @@ def g4_decode(
     any malformed mode code, run overflow, or truncated line."""
     if columns <= 0 or columns > 1 << 16:
         return None
-    bits = _Bits(data)
+    bits = BitReader(data)
     # reference transitions for the imaginary all-white line above
     ref: list[int] = [columns, columns]
     out: list[np.ndarray] = []
     max_rows = rows if rows is not None else 1 << 20
-    while len(out) < max_rows:
-        if bits.pos >= bits.n:
-            break
-        # encoder zero-padding to the byte boundary after the last line
-        first_partial = (
-            bits.data[bits.pos >> 3] & (0xFF >> (bits.pos & 7))
-            if bits.pos < bits.n
-            else 0
-        )
-        if first_partial == 0 and not any(
-            bits.data[(bits.pos >> 3) + 1 :]
-        ):
-            break
-        # EOFB: 000000000001 000000000001
-        if bits.peek(24) == 0b000000000001000000000001:
-            break
-        cur = _decode_2d_line(bits, ref, columns)
-        if cur is None:
-            return None
-        out.append(_render_line(cur, columns))
-        ref = cur + [columns, columns]
+    try:
+        while len(out) < max_rows:
+            # encoder zero-padding to the byte boundary after the last line
+            if bits.rest_is_zero():
+                break
+            # EOFB: 000000000001 000000000001
+            if bits.peek(24) == 0b000000000001000000000001:
+                break
+            cur = _decode_2d_line(bits, ref, columns)
+            if cur is None:
+                return None
+            out.append(_render_line(cur, columns))
+            ref = cur + [columns, columns]
+    except BitstreamError:
+        return None
     if rows is not None and len(out) != rows:
         return None
     if not out:
@@ -291,7 +242,7 @@ def g4_decode(
 
 
 def _decode_2d_line(
-    bits: _Bits, ref: list[int], columns: int
+    bits: BitReader, ref: list[int], columns: int
 ) -> list[int] | None:
     """One 2D-coded line (pass / vertical / horizontal modes against
     the reference line's changing elements) → its transition
@@ -317,20 +268,18 @@ def _decode_2d_line(
             idx += 1
         b1 = ref[idx] if idx < len(ref) else columns
         b2 = ref[idx + 1] if idx + 1 < len(ref) else columns
-        p = bits.peek(7)
-        if p is None:
-            return None
+        p = bits.peek(7)  # 0 past the end: falls to the garbage branch
         if p >> 6 == 0b1:  # V0
-            bits.pos += 1
+            bits.skip(1)
             a1 = b1
         elif p >> 4 == 0b011:  # VR1
-            bits.pos += 3
+            bits.skip(3)
             a1 = b1 + 1
         elif p >> 4 == 0b010:  # VL1
-            bits.pos += 3
+            bits.skip(3)
             a1 = b1 - 1
         elif p >> 4 == 0b001:  # horizontal
-            bits.pos += 3
+            bits.skip(3)
             start = max(a0, 0)
             r1 = _read_run(bits, color_white)
             if r1 is None:
@@ -347,20 +296,20 @@ def _decode_2d_line(
             a0 = t2
             continue  # color unchanged (two runs consumed)
         elif p >> 3 == 0b0001:  # pass
-            bits.pos += 4
+            bits.skip(4)
             a0 = b2
             continue
         elif p >> 1 == 0b000011:  # VR2
-            bits.pos += 6
+            bits.skip(6)
             a1 = b1 + 2
         elif p >> 1 == 0b000010:  # VL2
-            bits.pos += 6
+            bits.skip(6)
             a1 = b1 - 2
         elif p == 0b0000011:  # VR3
-            bits.pos += 7
+            bits.skip(7)
             a1 = b1 + 3
         elif p == 0b0000010:  # VL3
-            bits.pos += 7
+            bits.skip(7)
             a1 = b1 - 3
         else:
             return None  # EOL mid-line, or garbage
@@ -382,7 +331,7 @@ def _render_line(cur: list[int], columns: int) -> "np.ndarray":
     return line
 
 
-def _decode_1d_line(bits: _Bits, columns: int) -> list[int] | None:
+def _decode_1d_line(bits: BitReader, columns: int) -> list[int] | None:
     """One T.4 modified-Huffman 1D line → transition positions (run
     sums must hit ``columns`` exactly); used by the 1D-tagged lines
     of mixed-2D Group 3, where the next line's 2D coding needs the
@@ -424,45 +373,40 @@ def g3_2d_decode(
     line, any malformed code, or a row-count mismatch."""
     if columns <= 0 or columns > 1 << 16:
         return None
-    bits = _Bits(data)
+    bits = BitReader(data)
     ref: list[int] | None = None  # no reference before the first line
     out: list[np.ndarray] = []
     max_rows = rows if rows is not None else 1 << 20
-    while len(out) < max_rows:
-        # FILL (zero bits) then EOL; a 1 before 11 zeros is garbage
-        zeros = 0
-        at_end = False
-        while True:
-            b = bits.read1()
-            if b is None:
-                at_end = True
+    try:
+        while len(out) < max_rows:
+            # FILL (zero bits) then EOL; a 1 before 11 zeros is garbage.
+            # Running out of bits here is the normal end of the stream.
+            try:
+                zeros = bits.unary()
+            except BitstreamError:
                 break
-            if b == 0:
-                zeros += 1
-                continue
             if zeros < 11:
                 return None
-            break
-        if at_end:
-            break
-        tag = bits.read1()
-        if tag is None:
-            break
-        # RTC: the next thing after EOL+tag is another EOL (no T.4
-        # code has 11 leading zeros, so this cannot shadow line data)
-        if bits.peek(12) == 0b000000000001:
-            break
-        if tag:
-            cur = _decode_1d_line(bits, columns)
-        else:
-            if ref is None:
-                return None  # first line must be 1D: nothing above
-            cur = _decode_2d_line(bits, ref + [columns, columns],
-                                  columns)
-        if cur is None:
-            return None
-        out.append(_render_line(cur, columns))
-        ref = cur
+            if bits.pos >= bits.end:
+                break  # EOL without a tag bit: the stream ended
+            tag = bits.u(1)
+            # RTC: the next thing after EOL+tag is another EOL (no T.4
+            # code has 11 leading zeros, so this cannot shadow line data)
+            if bits.peek(12) == 0b000000000001:
+                break
+            if tag:
+                cur = _decode_1d_line(bits, columns)
+            else:
+                if ref is None:
+                    return None  # first line must be 1D: nothing above
+                cur = _decode_2d_line(bits, ref + [columns, columns],
+                                      columns)
+            if cur is None:
+                return None
+            out.append(_render_line(cur, columns))
+            ref = cur
+    except BitstreamError:
+        return None
     if rows is not None and len(out) != rows:
         return None
     if not out:

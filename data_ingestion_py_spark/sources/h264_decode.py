@@ -33,79 +33,17 @@ path that lets a 100 TB pipeline fetch ONLY keyframe byte ranges
 
 from __future__ import annotations
 
+from data_ingestion_py_spark.sources.bits import (
+    BitReader,
+    BitstreamError,
+    ebsp_to_rbsp,
+)
 from data_ingestion_py_spark.sources.spread import spread_for_kernel
 
 try:  # numpy is a hard dep of the package; guard for doc tooling only
     import numpy as np
 except ImportError:  # pragma: no cover
     np = None  # type: ignore[assignment]
-
-
-# ---------------------------------------------------------------------
-# bit reader over RBSP (emulation-prevention bytes already removed)
-# ---------------------------------------------------------------------
-
-
-class _Bits:
-    __slots__ = ("data", "pos", "n")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.n = len(data) * 8
-
-    def u(self, k: int) -> int | None:
-        if self.pos + k > self.n:
-            return None
-        v = 0
-        p = self.pos
-        d = self.data
-        for i in range(k):
-            v = (v << 1) | ((d[(p + i) >> 3] >> (7 - ((p + i) & 7))) & 1)
-        self.pos += k
-        return v
-
-    def ue(self) -> int | None:
-        zeros = 0
-        while True:
-            b = self.u(1)
-            if b is None:
-                return None
-            if b:
-                break
-            zeros += 1
-            if zeros > 31:
-                return None
-        if zeros == 0:
-            return 0
-        rest = self.u(zeros)
-        if rest is None:
-            return None
-        return (1 << zeros) - 1 + rest
-
-    def se(self) -> int | None:
-        k = self.ue()
-        if k is None:
-            return None
-        return (k + 1) >> 1 if k & 1 else -(k >> 1)
-
-    def byte_align(self) -> None:
-        if self.pos % 8:
-            self.pos += 8 - self.pos % 8
-
-
-def ebsp_to_rbsp(data: bytes) -> bytes:
-    """Strip emulation-prevention bytes (00 00 03 -> 00 00)."""
-    out = bytearray()
-    i, n = 0, len(data)
-    while i < n:
-        if i + 2 < n and data[i] == 0 and data[i + 1] == 0 and data[i + 2] == 3:
-            out += data[i : i + 2]
-            i += 3
-        else:
-            out.append(data[i])
-            i += 1
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------
@@ -326,23 +264,24 @@ _TZC_TREES = {k: _build_tree(v) for k, v in _TOTAL_ZEROS_CDC.items()}
 _RB_TREES = {k: _build_tree(v) for k, v in _RUN_BEFORE.items()}
 
 
-def _read_vlc(bits: _Bits, tree: dict):
+def _read_vlc(bits: BitReader, tree: dict):
+    """One code of a ``_build_tree`` table (codes are ≤ 16 bits), or
+    None when the bits match no code."""
     node = tree
-    for _ in range(20):
-        b = bits.u(1)
-        if b is None:
-            return None
-        nxt = node.get(b)
+    head = bits.peek(16)
+    for depth in range(15, -1, -1):
+        nxt = node.get((head >> depth) & 1)
         if nxt is None:
             return None
         if isinstance(nxt, tuple):
+            bits.skip(16 - depth)
             return nxt[1]
         node = nxt
     return None
 
 
 def _residual_block(
-    bits: _Bits, n_coeff_max: int, nc: int
+    bits: BitReader, n_coeff_max: int, nc: int
 ) -> list[int] | None:
     """One CAVLC residual block (§9.2) → coefficient list of length
     ``n_coeff_max`` in decoding (zigzag) order, or None."""
@@ -356,8 +295,6 @@ def _residual_block(
         ct = _read_vlc(bits, _CT_TREES[2])
     else:
         v = bits.u(6)
-        if v is None:
-            return None
         ct = (0, 0) if v == 3 else ((v >> 2) + 1, v & 3)
     if ct is None:
         return None
@@ -367,36 +304,19 @@ def _residual_block(
         return coeffs
     if total_coeff > n_coeff_max or trailing_ones > total_coeff:
         return None
-    levels: list[int] = []
-    for _ in range(trailing_ones):
-        s = bits.u(1)
-        if s is None:
-            return None
-        levels.append(-1 if s else 1)
+    levels = [-1 if bits.u(1) else 1 for _ in range(trailing_ones)]
     suffix_len = 1 if (total_coeff > 10 and trailing_ones < 3) else 0
     for i in range(total_coeff - trailing_ones):
-        prefix = 0
-        while True:
-            b = bits.u(1)
-            if b is None:
-                return None
-            if b:
-                break
-            prefix += 1
-            if prefix > 32:
-                return None
+        prefix = bits.unary()
+        if prefix > 32:
+            return None
         if suffix_len == 0 and prefix == 14:
             sz = 4
         elif prefix >= 15:
             sz = prefix - 3
         else:
             sz = suffix_len
-        suffix = 0
-        if sz:
-            suffix = bits.u(sz)
-            if suffix is None:
-                return None
-        level_code = (min(15, prefix) << suffix_len) + suffix
+        level_code = (min(15, prefix) << suffix_len) + bits.u(sz)
         if prefix >= 15 and suffix_len == 0:
             level_code += 15
         if prefix >= 16:
@@ -858,104 +778,31 @@ def _pred_chroma_dc(plane, cy, cx, have_up, have_left) -> None:
 # ---------------------------------------------------------------------
 
 
-def parse_sps_decode(rbsp: bytes) -> dict | None:
-    """The SPS fields an intra decoder needs (beyond the r14 geometry
-    parse): sizes, cropping, frame_mbs_only. Refuses scaling
-    matrices, chroma formats other than implicit 4:2:0, and field
-    coding."""
-    b = _Bits(rbsp)
-    profile = b.u(8)
-    b.u(8)  # constraint flags + reserved
-    level = b.u(8)
-    if b.ue() is None:  # sps id
-        return None
-    if profile in (100, 110, 122, 244, 44, 83, 86, 118, 128):
-        cf = b.ue()
-        if cf != 1:
-            return None  # only 4:2:0
-        if b.ue() is None or b.ue() is None:  # bit depths
-            return None
-        b.u(1)
-        if b.u(1):  # scaling matrices
-            return None
-    log2_max_frame_num = b.ue()
-    if log2_max_frame_num is None:
-        return None
-    poc_type = b.ue()
-    log2_max_poc_lsb = 4
-    if poc_type == 0:
-        v = b.ue()
-        if v is None:
-            return None
-        log2_max_poc_lsb = v + 4
-    elif poc_type == 1:
-        b.u(1)
-        if b.se() is None or b.se() is None:
-            return None
-        n = b.ue()
-        if n is None:
-            return None
-        for _ in range(n):
-            if b.se() is None:
-                return None
-    if b.ue() is None:  # max_num_ref_frames
-        return None
-    b.u(1)
-    w_mbs = b.ue()
-    h_units = b.ue()
-    if w_mbs is None or h_units is None:
-        return None
-    frame_mbs_only = b.u(1)
-    if not frame_mbs_only:
-        return None  # fields/MBAFF: refuse
-    b.u(1)  # direct_8x8
-    crop = (0, 0, 0, 0)
-    if b.u(1):
-        vals = [b.ue() for _ in range(4)]
-        if any(v is None for v in vals):
-            return None
-        crop = tuple(vals)
-    return {
-        "profile_idc": profile,
-        "level_idc": level,
-        "pic_width_in_mbs": w_mbs + 1,
-        "pic_height_in_mbs": h_units + 1,
-        "log2_max_frame_num": log2_max_frame_num + 4,
-        "poc_type": poc_type,
-        "log2_max_poc_lsb": log2_max_poc_lsb,
-        "crop": crop,
-    }
-
-
 def parse_pps_decode(rbsp: bytes) -> dict | None:
-    """PPS fields for CAVLC intra decode; CABAC, slice groups, and
-    8x8 transforms refuse."""
-    b = _Bits(rbsp)
-    if b.ue() is None or b.ue() is None:  # pps id, sps id
+    """PPS fields for CAVLC intra decode; CABAC, slice groups,
+    constrained intra prediction, and truncated bits refuse."""
+    b = BitReader(rbsp)
+    try:
+        b.ue()  # pps id
+        b.ue()  # sps id
+        if b.u(1):  # entropy_coding_mode_flag: CABAC
+            return None
+        b.u(1)  # bottom_field_pic_order
+        if b.ue() != 0:
+            return None  # slice groups: refuse
+        b.ue()  # num_ref_idx_l0_default_active_minus1
+        b.ue()  # num_ref_idx_l1_default_active_minus1
+        b.u(1)  # weighted_pred
+        b.u(2)  # weighted_bipred
+        qp = b.se()
+        b.se()  # pic_init_qs
+        cqo = b.se()
+        dbc = b.u(1)  # deblocking_filter_control_present
+        if b.u(1):  # constrained_intra_pred
+            return None  # changes availability rules; refuse for now
+        redundant = b.u(1)
+    except BitstreamError:
         return None
-    if b.u(1):  # entropy_coding_mode_flag: CABAC
-        return None
-    b.u(1)  # bottom_field_pic_order
-    ng = b.ue()
-    if ng is None or ng != 0:
-        return None  # slice groups: refuse
-    if b.ue() is None or b.ue() is None:  # num_ref_idx defaults
-        return None
-    b.u(1)  # weighted_pred
-    b.u(2)  # weighted_bipred
-    qp = b.se()
-    if qp is None:
-        return None
-    if b.se() is None:  # pic_init_qs
-        return None
-    cqo = b.se()
-    if cqo is None:
-        return None
-    dbc = b.u(1)  # deblocking_filter_control_present
-    constrained_intra = b.u(1)
-    if constrained_intra:
-        return None  # changes availability rules; refuse for now
-    redundant = b.u(1)
     return {
         "pic_init_qp": 26 + qp,
         "chroma_qp_offset": cqo,
@@ -969,37 +816,35 @@ def decode_idr_slice(
 ) -> "tuple[np.ndarray, np.ndarray, np.ndarray] | None":
     """Decode one IDR I-slice covering the whole frame →
     (Y, Cb, Cr) uint8 arrays (full uncropped MB grid; the caller
-    applies SPS cropping). None on any unsupported shape or
-    malformed bitstream — never guessed pixels."""
+    applies SPS cropping). ``sps`` comes from
+    ``multimodal.h264_sps_fields`` and must be 4:2:0 frame-coded.
+    None on any unsupported shape or malformed or truncated
+    bitstream — never guessed pixels."""
     if np is None:  # pragma: no cover
         return None
-    b = _Bits(slice_rbsp)
+    try:
+        return _decode_slice(sps, pps, BitReader(slice_rbsp))
+    except BitstreamError:
+        return None
+
+
+def _decode_slice(sps: dict, pps: dict, b: BitReader):
+    """``decode_idr_slice`` minus the truncation catch."""
     first_mb = b.ue()
     slice_type = b.ue()
     if first_mb != 0 or slice_type not in (2, 7):
         return None  # partial-frame slices / non-I: refuse
-    if b.ue() is None:  # pps id
-        return None
-    if b.u(sps["log2_max_frame_num"]) is None:  # frame_num
-        return None
-    if b.ue() is None:  # idr_pic_id
-        return None
+    b.ue()  # pps id
+    b.u(sps["log2_max_frame_num"])  # frame_num
+    b.ue()  # idr_pic_id
     if sps["poc_type"] == 0:
-        if b.u(sps["log2_max_poc_lsb"]) is None:  # pic_order_cnt_lsb
-            return None
+        b.u(sps["log2_max_poc_lsb"])  # pic_order_cnt_lsb
     # dec_ref_pic_marking for IDR: no_output_of_prior_pics + long_term
-    if b.u(1) is None or b.u(1) is None:
-        return None
+    b.u(2)
     qp_delta = b.se()
-    if qp_delta is None:
-        return None
-    if pps["deblock_control"]:
-        dfi = b.ue()
-        if dfi is None:
-            return None
-        if dfi != 1:
-            if b.se() is None or b.se() is None:
-                return None
+    if pps["deblock_control"] and b.ue() != 1:
+        b.se()  # slice_alpha_c0_offset_div2
+        b.se()  # slice_beta_offset_div2
     qp = pps["pic_init_qp"] + qp_delta
     if not 0 <= qp <= 51:
         return None
@@ -1037,7 +882,7 @@ def decode_idr_slice(
         my_mb, mx_mb = divmod(mb, wmb)
         yy, xx = my_mb * 16, mx_mb * 16
         mb_type = b.ue()
-        if mb_type is None or mb_type > 25:
+        if mb_type > 25:
             return None
 
         def avail(py, px):
@@ -1046,20 +891,14 @@ def decode_idr_slice(
             return blk_done[py >> 2][px >> 2]
 
         if mb_type == 25:  # I_PCM
-            b.byte_align()
+            b.align()
             for r in range(16):
                 for c in range(16):
-                    v = b.u(8)
-                    if v is None:
-                        return None
-                    Y[yy + r][xx + c] = v
+                    Y[yy + r][xx + c] = b.u(8)
             for plane in (Cb, Cr):
                 for r in range(8):
                     for c in range(8):
-                        v = b.u(8)
-                        if v is None:
-                            return None
-                        plane[yy // 2 + r][xx // 2 + c] = v
+                        plane[yy // 2 + r][xx // 2 + c] = b.u(8)
             by, bx = my_mb * 4, mx_mb * 4
             for r in range(4):
                 for c in range(4):
@@ -1075,29 +914,20 @@ def decode_idr_slice(
         if mb_type == 0:  # I_4x4
             modes: list[int] = []
             for blk in range(16):
-                prev = b.u(1)
-                if prev is None:
-                    return None
-                if prev:
+                if b.u(1):  # prev_intra4x4_pred_mode
                     modes.append(-1)  # use predicted
                 else:
-                    rem = b.u(3)
-                    if rem is None:
-                        return None
-                    modes.append(rem)
+                    modes.append(b.u(3))
             chroma_mode = b.ue()
-            if chroma_mode is None or chroma_mode > 3:
+            if chroma_mode > 3:
                 return None
             cbp_idx = b.ue()
-            if cbp_idx is None or cbp_idx >= 48:
+            if cbp_idx >= 48:
                 return None
             cbp = _CBP_INTRA[cbp_idx]
             cbp_luma, cbp_chroma = cbp & 15, cbp >> 4
             if cbp:
-                d = b.se()
-                if d is None:
-                    return None
-                qp = qp + d
+                qp += b.se()
                 if not 0 <= qp <= 51:
                     return None
             # decode the 16 4x4 blocks in the spec's raster-in-8x8
@@ -1148,12 +978,9 @@ def decode_idr_slice(
             cbp_chroma = (t // 4) % 3
             cbp_luma = 15 if t >= 12 else 0
             chroma_mode = b.ue()
-            if chroma_mode is None or chroma_mode > 3:
+            if chroma_mode > 3:
                 return None
-            d = b.se()
-            if d is None:
-                return None
-            qp = qp + d
+            qp += b.se()
             if not 0 <= qp <= 51:
                 return None
             have_up = avail(yy - 1, xx)
@@ -1256,10 +1083,13 @@ def decode_idr_slice(
 def decode_idr_annexb(payload: bytes) -> dict | None:
     """Decode the FIRST IDR frame of an Annex-B elementary stream →
     ``{"width", "height", "y", "cb", "cr"}`` (cropped per SPS).
-    Composes the r14 NAL walk: SPS + PPS + the first type-5 NAL.
-    None when any piece is missing or unsupported."""
+    Composes the r14 NAL walk and the shared SPS walk
+    (``multimodal.h264_sps_fields``): SPS + PPS + the first type-5
+    NAL. The first SPS the decoder supports is used. None when any
+    piece is missing or unsupported."""
     from data_ingestion_py_spark.sources.multimodal import (
         h264_annexb_nals,
+        h264_sps_fields,
     )
 
     idx = h264_annexb_nals(payload, max_nals=512)
@@ -1269,7 +1099,10 @@ def decode_idr_annexb(payload: bytes) -> dict | None:
     for _i, off, size, ntype, _k in idx["nals"]:
         nal = payload[off : off + size]
         if ntype == 7 and sps is None:
-            sps = parse_sps_decode(ebsp_to_rbsp(nal[1:]))
+            f = h264_sps_fields(ebsp_to_rbsp(nal[1:]))
+            # 4:2:0 frames only: no 4:2:2/4:4:4, no fields
+            if f and f["chroma_format_idc"] == 1 and f["frame_mbs_only"]:
+                sps = f
         elif ntype == 8 and pps is None:
             pps = parse_pps_decode(ebsp_to_rbsp(nal[1:]))
         elif ntype == 5 and idr is None:

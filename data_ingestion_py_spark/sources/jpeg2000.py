@@ -303,7 +303,9 @@ def decode_codeblock(
 
 class _HdrBits:
     """Packet-header bit reader with the 0xFF stuffing rule: a byte
-    following 0xFF carries only 7 bits (its MSB is a stuffed 0)."""
+    following 0xFF carries only 7 bits (its MSB is a stuffed 0). Kept
+    apart from ``sources/bits``, whose reads would otherwise all have
+    to check for the rule."""
 
     def __init__(self, data: bytes, pos: int = 0):
         self.data = data

@@ -31,6 +31,11 @@ shape — (doc_id, page_number, image_bytes) rows.
 
 from __future__ import annotations
 
+from data_ingestion_py_spark.sources.bits import (
+    BitReader,
+    BitstreamError,
+    ebsp_to_rbsp,
+)
 from data_ingestion_py_spark.sources.spread import spread_for_kernel
 
 import hashlib
@@ -979,21 +984,16 @@ def lzw_msb_decode(
     independent compressing encoder in pytest. Returns None for torn
     streams (no EOI), codes past the table (other than KwKwK), or
     output past ``max_out`` — the bomb guard."""
-    nbits = len(data) * 8
-    pos = 0
+    bits = BitReader(data)
     width = 9
     table = [bytes([i]) for i in range(256)] + [b"", b""]
     prev: bytes | None = None
     out = bytearray()
     while True:
-        if pos + width > nbits:
+        try:
+            code = bits.u(width)
+        except BitstreamError:
             return None  # torn: EOI never arrived
-        code = 0
-        for k in range(width):
-            code = (code << 1) | (
-                (data[(pos + k) >> 3] >> (7 - ((pos + k) & 7))) & 1
-            )
-        pos += width
         if code == 256:  # CLEAR
             table = table[:258]
             width = 9
@@ -1305,43 +1305,31 @@ def _jpeg_entropy_segments(
     return None  # ran out of bytes before EOI — truncated
 
 
-class _JpegBitReader:
-    """MSB-first bit reader over one unstuffed entropy segment. Reads
-    past the final byte fail (the encoder pads the last byte with 1s,
-    so up to 7 pad bits inside it are legal by construction)."""
-
-    __slots__ = ("buf", "pos", "limit")
-
-    def __init__(self, seg: bytes):
-        self.buf = seg + b"\xff\xff\xff"  # safe 16-bit peeks at the tail
-        self.pos = 0
-        self.limit = 8 * len(seg)
-
-    def peek16(self) -> int:
-        byte0 = self.pos >> 3
-        chunk = int.from_bytes(self.buf[byte0 : byte0 + 3], "big")
-        return (chunk >> (8 - (self.pos & 7))) & 0xFFFF
-
-    def take(self, nbits: int) -> int | None:
-        if self.pos + nbits > self.limit:
-            return None
-        byte0 = self.pos >> 3
-        chunk = int.from_bytes(self.buf[byte0 : byte0 + 4], "big")
-        out = (chunk >> (32 - (self.pos & 7) - nbits)) & ((1 << nbits) - 1)
-        self.pos += nbits
-        return out
-
-    def huff(self, table) -> int | None:
-        mincode, maxcode, valptr, vals = table
-        peek = self.peek16()
-        for length in range(1, 17):
-            c = peek >> (16 - length)
-            if c <= maxcode[length]:
-                if self.pos + length > self.limit:
-                    return None
-                self.pos += length
-                return vals[valptr[length] + c - mincode[length]]
-        return None
+def _jpeg_huff(bits: BitReader, table: tuple) -> int | None:
+    """One symbol of a ``_jpeg_huff_table``: peek 16 bits, find the
+    code length whose canonical range holds the prefix, consume it.
+    None when the bits match no code; ``BitstreamError`` when the code
+    runs past the segment (the encoder pads the last byte with 1s, so
+    up to 7 pad bits inside it are legal by construction)."""
+    mincode, maxcode, valptr, vals = table
+    # ``bits.peek(16)`` and ``bits.skip(length)`` inlined: this runs
+    # once per symbol, the hot loop of every JPEG decode
+    p = bits.pos
+    e = bits.end
+    q = p + 16
+    if q <= e:
+        peek = int.from_bytes(bits.data[p >> 3 : (q + 7) >> 3], "big")
+        peek = (peek >> (-q & 7)) & 0xFFFF
+    else:
+        peek = bits.peek(16)
+    for length in range(1, 17):
+        c = peek >> (16 - length)
+        if c <= maxcode[length]:
+            if p + length > e:
+                raise BitstreamError
+            bits.pos = p + length
+            return vals[valptr[length] + c - mincode[length]]
+    return None
 
 
 def _jpeg_extend(v: int, s: int) -> int:
@@ -1380,7 +1368,8 @@ def _jpeg_progressive_fill(
     arrays are allocated at, which is exactly the off-by-padding trap
     this walk has to avoid. Restart markers reset DC predictors and
     the EOB run per segment. Returns False (→ honest None upstream)
-    for desync, truncation, missing tables, or out-of-range runs."""
+    for desync, missing tables, or out-of-range runs; truncation
+    raises the reader's ``BitstreamError``."""
     n_mcus = mcus_x * mcus_y
     for sel, ss, se, ah, al, ri, segments in scans:
         is_dc = ss == 0
@@ -1404,7 +1393,7 @@ def _jpeg_progressive_fill(
         ac_t = None if is_dc else huff_ac[sel[0][2]]
         p1, m1 = 1 << al, -(1 << al)
         seg_i = 0
-        reader = _JpegBitReader(segments[0])
+        reader = BitReader(segments[0])
         pred = dict.fromkeys((c for c, _, _ in sel), 0)
         eobrun = 0
         for u in range(units):
@@ -1412,7 +1401,7 @@ def _jpeg_progressive_fill(
                 seg_i += 1
                 if seg_i >= len(segments):
                     return False
-                reader = _JpegBitReader(segments[seg_i])
+                reader = BitReader(segments[seg_i])
                 pred = dict.fromkeys(pred, 0)
                 eobrun = 0
             if interleaved:
@@ -1434,20 +1423,14 @@ def _jpeg_progressive_fill(
                 for c, idx in targets:
                     block = coefs[c][idx]
                     if ah == 0:  # first pass: diff-coded, point transform
-                        s = reader.huff(dc_t[c])
+                        s = _jpeg_huff(reader, dc_t[c])
                         if s is None or s > 15:
                             return False
                         if s:
-                            v = reader.take(s)
-                            if v is None:
-                                return False
-                            pred[c] += _jpeg_extend(v, s)
+                            pred[c] += _jpeg_extend(reader.u(s), s)
                         block[0] = pred[c] << al
                     else:  # refinement: one raw bit per block
-                        bit = reader.take(1)
-                        if bit is None:
-                            return False
-                        if bit:
+                        if reader.u(1):
                             block[0] |= p1
             elif ah == 0:  # AC first pass: EOB-run coded
                 if eobrun:
@@ -1456,7 +1439,7 @@ def _jpeg_progressive_fill(
                 block = coefs[targets[0][0]][targets[0][1]]
                 k = ss
                 while k <= se:
-                    rs = reader.huff(ac_t)
+                    rs = _jpeg_huff(reader, ac_t)
                     if rs is None:
                         return False
                     r, s = rs >> 4, rs & 0x0F
@@ -1464,57 +1447,39 @@ def _jpeg_progressive_fill(
                         if r == 15:  # ZRL: sixteen zeros
                             k += 16
                             continue
-                        eobrun = (1 << r) - 1  # covers SUBSEQUENT blocks
-                        if r:
-                            bits = reader.take(r)
-                            if bits is None:
-                                return False
-                            eobrun += bits
+                        # covers SUBSEQUENT blocks
+                        eobrun = (1 << r) - 1 + reader.u(r)
                         break
                     k += r
                     if k > se:
                         return False
-                    v = reader.take(s)
-                    if v is None:
-                        return False
-                    block[_JPEG_ZIGZAG[k]] = _jpeg_extend(v, s) << al
+                    block[_JPEG_ZIGZAG[k]] = _jpeg_extend(reader.u(s), s) << al
                     k += 1
             else:  # AC refinement
                 block = coefs[targets[0][0]][targets[0][1]]
                 k = ss
                 if eobrun == 0:
                     while k <= se:
-                        rs = reader.huff(ac_t)
+                        rs = _jpeg_huff(reader, ac_t)
                         if rs is None:
                             return False
                         r, s = rs >> 4, rs & 0x0F
                         newval = 0
                         if s == 0:
                             if r < 15:  # EOB run INCLUDING this block
-                                eobrun = 1 << r
-                                if r:
-                                    bits = reader.take(r)
-                                    if bits is None:
-                                        return False
-                                    eobrun += bits
+                                eobrun = (1 << r) + reader.u(r)
                                 break
                             # r == 15: skip 16 zero-history coefficients
                         else:
                             if s != 1:
                                 return False
-                            bit = reader.take(1)
-                            if bit is None:
-                                return False
-                            newval = p1 if bit else m1
+                            newval = p1 if reader.u(1) else m1
                         # cross r zero-history coefficients, applying a
                         # correction bit to every nonzero one passed
                         while k <= se:
                             z = _JPEG_ZIGZAG[k]
                             if block[z]:
-                                bit = reader.take(1)
-                                if bit is None:
-                                    return False
-                                if bit and not (block[z] & p1):
+                                if reader.u(1) and not (block[z] & p1):
                                     block[z] += p1 if block[z] > 0 else m1
                             else:
                                 if r == 0:
@@ -1530,10 +1495,7 @@ def _jpeg_progressive_fill(
                     while k <= se:
                         z = _JPEG_ZIGZAG[k]
                         if block[z]:
-                            bit = reader.take(1)
-                            if bit is None:
-                                return False
-                            if bit and not (block[z] & p1):
+                            if reader.u(1) and not (block[z] & p1):
                                 block[z] += p1 if block[z] > 0 else m1
                         k += 1
                     eobrun -= 1
@@ -1562,10 +1524,12 @@ def decode_jpeg_array(
     precision, truncated entropy streams, Huffman tables that overflow
     their code space, or streams that end mid-block.
 
-    The per-symbol Huffman walk is a Python loop (peek-16-and-compare,
-    no per-bit iteration) but dequantization, the 2D IDCT, plane
-    assembly, chroma upsampling (sample replication), and the YCbCr →
-    gray conversion are all batched numpy over every block at once.
+    The per-symbol Huffman walk is a Python loop (``_jpeg_huff``:
+    peek-16-and-compare on the shared ``sources/bits.BitReader``, one
+    reader per restart segment, no per-bit iteration) but
+    dequantization, the 2D IDCT, plane assembly, chroma upsampling
+    (sample replication), and the YCbCr → gray conversion are all
+    batched numpy over every block at once.
     Gray uses the SAME integer (r+g+b)//3 rule as every other decode
     path (single-component images are Y directly, consistent with
     r=g=b=Y), so checksums/phashes stay decoder-independent."""
@@ -1766,63 +1730,62 @@ def decode_jpeg_array(
         bw = mcus_x * hf
         bh = mcus_y * vf
         coefs.append(np.zeros((bh * bw, 64), dtype=np.int32))
-    if not progressive:
-        dc_tab = {ci: huff_dc[d] for ci, d, _ in sel}
-        ac_tab = {ci: huff_ac[a] for ci, _, a in sel}
-        order = [ci for ci, _, _ in sel]
+    try:
+        if not progressive:
+            dc_tab = {ci: huff_dc[d] for ci, d, _ in sel}
+            ac_tab = {ci: huff_ac[a] for ci, _, a in sel}
+            order = [ci for ci, _, _ in sel]
 
-        seg_i = 0
-        reader = _JpegBitReader(segments[0])
-        pred = dict.fromkeys(order, 0)
-        for mcu in range(n_mcus):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                seg_i += 1
-                if seg_i >= len(segments):
-                    return None
-                reader = _JpegBitReader(segments[seg_i])
-                pred = dict.fromkeys(order, 0)
-            my, mx = divmod(mcu, mcus_x)
-            for ci in order:
-                _, hf, vf = layout[ci]
-                for by in range(vf):
-                    for bx in range(hf):
-                        block = np.zeros(64, dtype=np.int32)
-                        s = reader.huff(dc_tab[ci])
-                        if s is None or s > 15:
-                            return None
-                        if s:
-                            v = reader.take(s)
-                            if v is None:
+            seg_i = 0
+            reader = BitReader(segments[0])
+            pred = dict.fromkeys(order, 0)
+            for mcu in range(n_mcus):
+                if restart_interval and mcu and mcu % restart_interval == 0:
+                    seg_i += 1
+                    if seg_i >= len(segments):
+                        return None
+                    reader = BitReader(segments[seg_i])
+                    pred = dict.fromkeys(order, 0)
+                my, mx = divmod(mcu, mcus_x)
+                for ci in order:
+                    _, hf, vf = layout[ci]
+                    for by in range(vf):
+                        for bx in range(hf):
+                            block = np.zeros(64, dtype=np.int32)
+                            s = _jpeg_huff(reader, dc_tab[ci])
+                            if s is None or s > 15:
                                 return None
-                            pred[ci] += _jpeg_extend(v, s)
-                        block[0] = pred[ci]
-                        k = 1
-                        while k < 64:
-                            rs = reader.huff(ac_tab[ci])
-                            if rs is None:
-                                return None
-                            r, sz = rs >> 4, rs & 0x0F
-                            if sz == 0:
-                                if r == 15:  # ZRL: sixteen zeros
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                return None
-                            v = reader.take(sz)
-                            if v is None:
-                                return None
-                            block[_JPEG_ZIGZAG[k]] = _jpeg_extend(v, sz)
-                            k += 1
-                        bw = mcus_x * (layout[ci][1])
-                        row = my * vf + by
-                        col = mx * hf + bx
-                        coefs[ci][row * bw + col] = block
-    elif not _jpeg_progressive_fill(
-        scans, coefs, comps, layout, mcus_x, mcus_y, hmax, vmax,
-        w, h, huff_dc, huff_ac,
-    ):
+                            if s:
+                                pred[ci] += _jpeg_extend(reader.u(s), s)
+                            block[0] = pred[ci]
+                            k = 1
+                            while k < 64:
+                                rs = _jpeg_huff(reader, ac_tab[ci])
+                                if rs is None:
+                                    return None
+                                r, sz = rs >> 4, rs & 0x0F
+                                if sz == 0:
+                                    if r == 15:  # ZRL: sixteen zeros
+                                        k += 16
+                                        continue
+                                    break  # EOB
+                                k += r
+                                if k > 63:
+                                    return None
+                                block[_JPEG_ZIGZAG[k]] = _jpeg_extend(
+                                    reader.u(sz), sz
+                                )
+                                k += 1
+                            bw = mcus_x * (layout[ci][1])
+                            row = my * vf + by
+                            col = mx * hf + bx
+                            coefs[ci][row * bw + col] = block
+        elif not _jpeg_progressive_fill(
+            scans, coefs, comps, layout, mcus_x, mcus_y, hmax, vmax,
+            w, h, huff_dc, huff_ac,
+        ):
+            return None
+    except BitstreamError:
         return None
     # dequantize + IDCT + assemble planes (all batched numpy)
     planes = []
@@ -2996,72 +2959,32 @@ def mp4_sample_plan(
 # omit or get wrong).
 
 
-def _rbsp_unescape(data: bytes) -> bytes:
-    """Strip H.264 emulation-prevention bytes (00 00 03 -> 00 00,
-    ISO 14496-10 §7.4.1.1) from a NAL payload."""
-    out = bytearray()
-    i, n = 0, len(data)
-    while i < n:
-        if i + 2 < n and data[i] == 0 and data[i + 1] == 0 and data[i + 2] == 3:
-            out += b"\x00\x00"
-            i += 3
-        else:
-            out.append(data[i])
-            i += 1
-    return bytes(out)
+#: profile_idc values whose SPS carries chroma_format_idc, the bit
+#: depths and the scaling-matrix flag (ISO 14496-10 §7.3.2.1.1)
+_H264_HIGH_PROFILES = (
+    100, 110, 122, 244, 44, 83, 86, 118, 128, 138, 139, 134, 135
+)
 
 
-class _H264Bits:
-    """MSB-first bit reader with the Exp-Golomb codes SPS parsing
-    needs. Raises ValueError past end — callers catch and refuse."""
-
-    def __init__(self, data: bytes):
-        self.d = data
-        self.pos = 0
-        self.n = len(data) * 8
-
-    def u(self, nbits: int) -> int:
-        if self.pos + nbits > self.n:
-            raise ValueError("sps truncated")
-        v = 0
-        for _ in range(nbits):
-            byte = self.d[self.pos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return v
-
-    def ue(self) -> int:
-        zeros = 0
-        while self.u(1) == 0:
-            zeros += 1
-            if zeros > 31:
-                raise ValueError("bad exp-golomb")
-        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
-
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
-
-
-def h264_sps_params(sps_nal: bytes) -> dict | None:
-    """Parse an SPS NAL unit (header byte + RBSP) → ``{"profile_idc",
-    "level_idc", "width", "height"}`` per ISO 14496-10 §7.3.2.1:
-    Exp-Golomb geometry fields, frame_mbs_only handling, and frame
-    cropping (4:2:0 / 4:2:2 / 4:4:4 crop units). None for truncated
-    bits or the scaling-matrix shapes this walk doesn't model —
-    honest absence, never guessed geometry."""
-    if not sps_nal or (sps_nal[0] & 0x1F) != 7:
-        return None
-    b = _H264Bits(_rbsp_unescape(sps_nal[1:]))
+def h264_sps_fields(rbsp: bytes) -> dict | None:
+    """Walk an SPS RBSP (NAL header byte and emulation prevention
+    already removed) per ISO 14496-10 §7.3.2.1.1 → every field the
+    geometry planner (``h264_sps_params``) and the intra decoder
+    (``sources/h264_decode``) use: ``profile_idc``, ``level_idc``,
+    ``chroma_format_idc``, ``frame_mbs_only``, ``pic_width_in_mbs``,
+    ``pic_height_in_mbs`` (FrameHeightInMbs: map units doubled for
+    field coding), ``log2_max_frame_num``, ``poc_type``,
+    ``log2_max_poc_lsb`` and ``crop`` = (left, right, top, bottom) in
+    crop units. None for truncated bits or scaling matrices, which
+    this walk does not parse."""
+    b = BitReader(rbsp)
     try:
         profile_idc = b.u(8)
         b.u(8)  # constraint flags + reserved
         level_idc = b.u(8)
         b.ue()  # seq_parameter_set_id
         chroma_format_idc = 1
-        if profile_idc in (
-            100, 110, 122, 244, 44, 83, 86, 118, 128, 138, 139, 134, 135
-        ):
+        if profile_idc in _H264_HIGH_PROFILES:
             chroma_format_idc = b.ue()
             if chroma_format_idc == 3:
                 b.u(1)  # separate_colour_plane_flag
@@ -3070,16 +2993,17 @@ def h264_sps_params(sps_nal: bytes) -> dict | None:
             b.u(1)  # qpprime_y_zero_transform_bypass
             if b.u(1):  # seq_scaling_matrix_present
                 return None  # scaling lists: honest seam (rare)
-        b.ue()  # log2_max_frame_num_minus4
+        log2_max_frame_num = b.ue() + 4
         poc_type = b.ue()
+        log2_max_poc_lsb = 4
         if poc_type == 0:
-            b.ue()
+            log2_max_poc_lsb = b.ue() + 4
         elif poc_type == 1:
-            b.u(1)
-            b.se()
-            b.se()
+            b.u(1)  # delta_pic_order_always_zero
+            b.se()  # offset_for_non_ref_pic
+            b.se()  # offset_for_top_to_bottom_field
             for _ in range(b.ue()):
-                b.se()
+                b.se()  # offset_for_ref_frame
         b.ue()  # max_num_ref_frames
         b.u(1)  # gaps_in_frame_num_value_allowed
         w_mbs = b.ue() + 1
@@ -3088,26 +3012,50 @@ def h264_sps_params(sps_nal: bytes) -> dict | None:
         if not frame_mbs_only:
             b.u(1)  # mb_adaptive_frame_field
         b.u(1)  # direct_8x8_inference
-        crop_l = crop_r = crop_t = crop_b = 0
+        crop = (0, 0, 0, 0)
         if b.u(1):  # frame_cropping_flag
-            crop_l, crop_r, crop_t, crop_b = (
-                b.ue(), b.ue(), b.ue(), b.ue()
-            )
-    except ValueError:
-        return None
-    # crop units per chroma format (§7.4.2.1.1): SubWidthC/SubHeightC
-    # are 2/2 for 4:2:0, 2/1 for 4:2:2, 1/1 for 4:4:4 and monochrome
-    sub_w = 2 if chroma_format_idc in (1, 2) else 1
-    sub_h = 2 if chroma_format_idc == 1 else 1
-    cux = sub_w
-    cuy = sub_h * (2 - frame_mbs_only)
-    width = w_mbs * 16 - (crop_l + crop_r) * cux
-    height = (2 - frame_mbs_only) * h_units * 16 - (crop_t + crop_b) * cuy
-    if width <= 0 or height <= 0:
+            crop = (b.ue(), b.ue(), b.ue(), b.ue())
+    except BitstreamError:
         return None
     return {
         "profile_idc": profile_idc,
         "level_idc": level_idc,
+        "chroma_format_idc": chroma_format_idc,
+        "frame_mbs_only": frame_mbs_only,
+        "pic_width_in_mbs": w_mbs,
+        "pic_height_in_mbs": (2 - frame_mbs_only) * h_units,
+        "log2_max_frame_num": log2_max_frame_num,
+        "poc_type": poc_type,
+        "log2_max_poc_lsb": log2_max_poc_lsb,
+        "crop": crop,
+    }
+
+
+def h264_sps_params(sps_nal: bytes) -> dict | None:
+    """Parse an SPS NAL unit (header byte + EBSP) → ``{"profile_idc",
+    "level_idc", "width", "height"}`` through ``h264_sps_fields``,
+    with frame cropping in the crop units of the chroma format (4:2:0
+    / 4:2:2 / 4:4:4). None for truncated bits or the scaling-matrix
+    shapes the walk doesn't model — honest absence, never guessed
+    geometry."""
+    if not sps_nal or (sps_nal[0] & 0x1F) != 7:
+        return None
+    f = h264_sps_fields(ebsp_to_rbsp(sps_nal[1:]))
+    if f is None:
+        return None
+    # crop units per chroma format (§7.4.2.1.1): SubWidthC/SubHeightC
+    # are 2/2 for 4:2:0, 2/1 for 4:2:2, 1/1 for 4:4:4 and monochrome
+    cf = f["chroma_format_idc"]
+    cux = 2 if cf in (1, 2) else 1
+    cuy = (2 if cf == 1 else 1) * (2 - f["frame_mbs_only"])
+    crop_l, crop_r, crop_t, crop_b = f["crop"]
+    width = f["pic_width_in_mbs"] * 16 - (crop_l + crop_r) * cux
+    height = f["pic_height_in_mbs"] * 16 - (crop_t + crop_b) * cuy
+    if width <= 0 or height <= 0:
+        return None
+    return {
+        "profile_idc": f["profile_idc"],
+        "level_idc": f["level_idc"],
         "width": width,
         "height": height,
     }
@@ -3919,54 +3867,6 @@ def decode_wav_samples(
     return None
 
 
-class _Bits:
-    """MSB-first bit reader over bytes — the shared primitive of the
-    FLAC frame decoder (subframe headers, Rice residuals). ``read``
-    pulls n bits as an unsigned int; ``unary`` counts 0-bits up to the
-    terminating 1 (the Rice quotient). Raises IndexError past the end —
-    callers translate truncation into honest None."""
-
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.pos = pos  # in bits
-
-    def read(self, n: int) -> int:
-        p = self.pos
-        end = p + n
-        if end > len(self.data) * 8:
-            raise IndexError("bitstream truncated")
-        self.pos = end
-        chunk = int.from_bytes(self.data[p // 8 : (end + 7) // 8], "big")
-        return (chunk >> ((-end) % 8)) & ((1 << n) - 1)
-
-    def read_signed(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v >> (n - 1) else v
-
-    def unary(self) -> int:
-        data, p = self.data, self.pos
-        nbits = len(data) * 8
-        q = 0
-        # byte-at-a-time: skip whole zero bytes, then bit_length for
-        # the position of the leading 1 — no per-bit loop
-        while p < nbits:
-            cur = data[p // 8] & (0xFF >> (p % 8))
-            if cur == 0:
-                q += 8 - (p % 8)
-                p += 8 - (p % 8)
-                continue
-            lead = 8 - cur.bit_length()  # zeros before the 1 in this byte
-            q += lead - (p % 8)
-            self.pos = (p // 8) * 8 + lead + 1
-            return q
-        raise IndexError("bitstream truncated")
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-
 def _crc8_flac(data: bytes) -> int:
     """CRC-8 poly 0x07, init 0 (FLAC frame-header CRC; check value of
     b'123456789' is 0xF4 — pinned in tests)."""
@@ -4018,8 +3918,11 @@ def decode_flac_samples(
     Honest gates: mono 16-bit streams only (returns None otherwise —
     stereo decorrelation is a straightforward extension, not yet
     wired); any CRC mismatch, bad sync, reserved code, or truncation
-    → None, never guessed samples. The Rice quotient scan is
-    byte-at-a-time (no per-bit loop); warmup+residual reconstruction
+    → None, never guessed samples. Bits come from the shared
+    ``sources/bits.BitReader``, whose ``unary`` scans the Rice
+    quotient byte-at-a-time (no per-bit loop); a wasted-bits count
+    that leaves no sample bits is corrupt. Warmup+residual
+    reconstruction
     is a per-sample loop — sequential by data dependency, exactly
     like the ADPCM predictor. Returns (sample_rate, int16 array)."""
     if payload is None or len(payload) < 8 or payload[:4] != b"fLaC":
@@ -4046,20 +3949,20 @@ def decode_flac_samples(
     out: list[int] = []
     while i < n and (total == 0 or len(out) < total):
         frame_start = i
-        bits_r = _Bits(payload, i * 8)
+        bits_r = BitReader(payload, i)
         try:
-            if bits_r.read(14) != 0x3FFE or bits_r.read(1):
+            if bits_r.u(14) != 0x3FFE or bits_r.u(1):
                 return None
-            bits_r.read(1)  # blocking strategy (either is fine)
-            bs_code = bits_r.read(4)
-            sr_code = bits_r.read(4)
-            if bits_r.read(4) != 0:  # channel assignment: mono only
+            bits_r.u(1)  # blocking strategy (either is fine)
+            bs_code = bits_r.u(4)
+            sr_code = bits_r.u(4)
+            if bits_r.u(4) != 0:  # channel assignment: mono only
                 return None
-            ss_code = bits_r.read(3)
-            if bits_r.read(1):
+            ss_code = bits_r.u(3)
+            if bits_r.u(1):
                 return None
             # UTF-8-coded frame/sample number (RFC 9639 §9.1.5)
-            first = bits_r.read(8)
+            first = bits_r.u(8)
             extra = 0
             if first >= 0xC0:
                 v = first
@@ -4069,7 +3972,7 @@ def decode_flac_samples(
                 if extra > 6:
                     return None
                 for _ in range(extra):
-                    if bits_r.read(8) & 0xC0 != 0x80:
+                    if bits_r.u(8) & 0xC0 != 0x80:
                         return None
             elif first >= 0x80:
                 return None
@@ -4079,44 +3982,46 @@ def decode_flac_samples(
                 return None
             blocksize = _FLAC_BLOCKSIZE[bs_code]
             if blocksize == -8:
-                blocksize = bits_r.read(8) + 1
+                blocksize = bits_r.u(8) + 1
             elif blocksize == -16:
-                blocksize = bits_r.read(16) + 1
+                blocksize = bits_r.u(16) + 1
             if sr_code == 12:
-                bits_r.read(8)
+                bits_r.u(8)
             elif sr_code in (13, 14):
-                bits_r.read(16)
+                bits_r.u(16)
             elif sr_code == 15:
                 return None
             hdr_end = bits_r.pos // 8
-            if _crc8_flac(payload[frame_start:hdr_end]) != bits_r.read(8):
+            if _crc8_flac(payload[frame_start:hdr_end]) != bits_r.u(8):
                 return None
             # --- one subframe (mono) ---
-            if bits_r.read(1):
+            if bits_r.u(1):
                 return None
-            sf_type = bits_r.read(6)
+            sf_type = bits_r.u(6)
             wasted = 0
-            if bits_r.read(1):
+            if bits_r.u(1):
                 wasted = bits_r.unary() + 1
+                if wasted >= 16:
+                    return None  # no sample bits left
             bps = 16 - wasted
             if sf_type == 0:  # CONSTANT
-                samples = [bits_r.read_signed(bps)] * blocksize
+                samples = [bits_r.signed(bps)] * blocksize
             elif sf_type == 1:  # VERBATIM
-                samples = [bits_r.read_signed(bps) for _ in range(blocksize)]
+                samples = [bits_r.signed(bps) for _ in range(blocksize)]
             elif 8 <= sf_type <= 12 or sf_type >= 32:
                 if sf_type >= 32:  # LPC
                     order = (sf_type & 31) + 1
-                    samples = [bits_r.read_signed(bps) for _ in range(order)]
-                    prec = bits_r.read(4) + 1
+                    samples = [bits_r.signed(bps) for _ in range(order)]
+                    prec = bits_r.u(4) + 1
                     if prec == 16:
                         return None  # 1111 is invalid per spec
-                    shift = bits_r.read_signed(5)
+                    shift = bits_r.signed(5)
                     if shift < 0:
                         return None
-                    coefs = [bits_r.read_signed(prec) for _ in range(order)]
+                    coefs = [bits_r.signed(prec) for _ in range(order)]
                 else:  # FIXED
                     order = sf_type - 8
-                    samples = [bits_r.read_signed(bps) for _ in range(order)]
+                    samples = [bits_r.signed(bps) for _ in range(order)]
                     coefs = list(_FLAC_FIXED_COEFS[order])
                     shift = 0
                 res = _flac_residual(bits_r, blocksize, order)
@@ -4133,9 +4038,9 @@ def decode_flac_samples(
                 samples = [s << wasted for s in samples]
             bits_r.align()
             crc_end = bits_r.pos // 8
-            if _crc16_flac(payload[frame_start:crc_end]) != bits_r.read(16):
+            if _crc16_flac(payload[frame_start:crc_end]) != bits_r.u(16):
                 return None
-        except IndexError:
+        except BitstreamError:
             return None
         if any(s < -32768 or s > 32767 for s in samples):
             return None  # corrupt stream: escaped the sample range
@@ -4149,33 +4054,33 @@ def decode_flac_samples(
 
 
 def _flac_residual(
-    bits_r: _Bits, blocksize: int, order: int
+    bits_r: BitReader, blocksize: int, order: int
 ) -> list[int] | None:
     """Rice-coded residual section (RFC 9639 §9.2.7): 2-bit method
     selects 4- or 5-bit Rice parameters, 4-bit partition order splits
     the block into 2^po equal partitions (the first short by the
     predictor order), all-ones parameter escapes to raw
     fixed-width-bit residuals. Zigzag 'unsigned folding' per spec."""
-    method = bits_r.read(2)
+    method = bits_r.u(2)
     if method > 1:
         return None
     pbits = 4 if method == 0 else 5
     escape = (1 << pbits) - 1
-    po = bits_r.read(4)
+    po = bits_r.u(4)
     if blocksize % (1 << po) or (blocksize >> po) <= order:
         return None
     res: list[int] = []
     for part in range(1 << po):
         count = (blocksize >> po) - (order if part == 0 else 0)
-        param = bits_r.read(pbits)
+        param = bits_r.u(pbits)
         if param == escape:
-            raw = bits_r.read(5)
+            raw = bits_r.u(5)
             for _ in range(count):
-                res.append(bits_r.read_signed(raw) if raw else 0)
+                res.append(bits_r.signed(raw))
             continue
         for _ in range(count):
             q = bits_r.unary()
-            u = (q << param) | bits_r.read(param)
+            u = (q << param) | bits_r.u(param)
             res.append((u >> 1) ^ -(u & 1))
     return res
 

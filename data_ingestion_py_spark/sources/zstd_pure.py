@@ -7,7 +7,10 @@ Frame_Content_Size, which left a documented seam. This module closes it:
 a from-the-spec decoder for zstd's entropy-coded blocks —
 
 - the REVERSE bitstream (last byte's 1-marker padding, bits consumed
-  downward, fields read MSB-first),
+  downward, fields read MSB-first) in its own ``_RevBits``: its
+  zero-filled end-of-stream flush is a contract no forward reader has;
+  the forward FSE table headers use the shared
+  ``sources/bits.LsbBitReader``,
 - FSE: normalized-count header parse (variable-width probabilities,
   zero-run 2-bit repeat flags, the ``remaining``-driven threshold walk)
   and decode-table construction (low-prob −1 cells at the table top,
@@ -37,6 +40,8 @@ guess.
 """
 
 from __future__ import annotations
+
+from data_ingestion_py_spark.sources.bits import BitstreamError, LsbBitReader
 
 # ---------------------------------------------------------------------------
 # Predefined sequence distributions (RFC 8878 §3.1.1.3.2.2)
@@ -99,7 +104,7 @@ def _ml_value(code: int, bits) -> int | None:
 
 
 # ---------------------------------------------------------------------------
-# Bit readers
+# The backward bit reader
 # ---------------------------------------------------------------------------
 
 
@@ -141,30 +146,6 @@ class _RevBits:
         )
         self.pos = 0
         return got, True
-
-
-class _FwdBits:
-    """Forward LSB-first reader (FSE table headers)."""
-
-    __slots__ = ("data", "pos", "n")
-
-    def __init__(self, data: bytes, start: int) -> None:
-        self.data = data
-        self.pos = start * 8
-        self.n = len(data) * 8
-
-    def read(self, nbits: int) -> int | None:
-        if self.pos + nbits > self.n:
-            return None
-        v = 0
-        for k in range(nbits):
-            p = self.pos + k
-            v |= ((self.data[p >> 3] >> (p & 7)) & 1) << k
-        self.pos += nbits
-        return v
-
-    def byte_pos(self) -> int:
-        return (self.pos + 7) // 8
 
 
 # ---------------------------------------------------------------------------
@@ -223,58 +204,49 @@ def _parse_fse_header(
     data: bytes, start: int, max_al: int, max_symbols: int
 ) -> tuple[list[int], int, int] | None:
     """Normalized-count parse (RFC 8878 §4.1.1) → (norm, accuracy_log,
-    next_byte_offset)."""
-    bits = _FwdBits(data, start)
-    low = bits.read(4)
-    if low is None:
-        return None
-    al = low + 5
-    if al > max_al:
-        return None
-    remaining = (1 << al) + 1
-    threshold = 1 << al
-    nbits = al + 1
-    norm: list[int] = []
-    prev_zero = False
-    while remaining > 1:
-        if len(norm) > max_symbols:
+    next_byte_offset). None on a malformed or truncated header."""
+    bits = LsbBitReader(data, start)
+    try:
+        al = bits.read(4) + 5
+        if al > max_al:
             return None
-        if prev_zero:
-            # 2-bit repeat flags: 3 means "3 more zeros, read again"
-            while True:
-                rep = bits.read(2)
-                if rep is None:
-                    return None
-                norm.extend([0] * rep if rep < 3 else [0, 0, 0])
-                if rep < 3:
-                    break
-                if len(norm) > max_symbols:
-                    return None
-            prev_zero = False
-            continue
-        maxv = (2 * threshold - 1) - remaining
-        small = bits.read(nbits - 1)
-        if small is None:
-            return None
-        if small < maxv:
-            count = small
-        else:
-            extra = bits.read(1)
-            if extra is None:
+        remaining = (1 << al) + 1
+        threshold = 1 << al
+        nbits = al + 1
+        norm: list[int] = []
+        prev_zero = False
+        while remaining > 1:
+            if len(norm) > max_symbols:
                 return None
-            count = small + (extra << (nbits - 1))
-            if count >= threshold:
-                count -= maxv
-        count -= 1  # stored value is prob+1; 0 → "-1" (low prob)
-        remaining -= -count if count < 0 else count
-        norm.append(count)
-        prev_zero = count == 0
-        while remaining < threshold:
-            nbits -= 1
-            threshold >>= 1
+            if prev_zero:
+                # 2-bit repeat flags: 3 means "3 more zeros, read again"
+                while True:
+                    rep = bits.read(2)
+                    norm.extend([0] * rep if rep < 3 else [0, 0, 0])
+                    if rep < 3:
+                        break
+                    if len(norm) > max_symbols:
+                        return None
+                prev_zero = False
+                continue
+            maxv = (2 * threshold - 1) - remaining
+            count = bits.read(nbits - 1)
+            if count >= maxv:
+                count += bits.read(1) << (nbits - 1)
+                if count >= threshold:
+                    count -= maxv
+            count -= 1  # stored value is prob+1; 0 → "-1" (low prob)
+            remaining -= -count if count < 0 else count
+            norm.append(count)
+            prev_zero = count == 0
+            while remaining < threshold:
+                nbits -= 1
+                threshold >>= 1
+    except BitstreamError:
+        return None
     if remaining != 1 or len(norm) > max_symbols:
         return None
-    return norm, al, bits.byte_pos()
+    return norm, al, (bits.pos + 7) >> 3
 
 
 def _fse_decompress_weights(

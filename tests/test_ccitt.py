@@ -227,6 +227,11 @@ def test_g4_corruption_refuses():
     assert g4_decode(b"\x00\x18" * 8, 64, 6) is None
     # all-padding stream: zero lines, not six
     assert g4_decode(b"\x00" * 30, 64, 6) is None
+    # six all-white V0 lines, then a VL1 line ("010" "1") whose VL1
+    # code is cut after "01": the zero padding must not complete it
+    assert g4_decode(b"\xfd\x40", 8, 7).shape == (7, 8)
+    assert g4_decode(b"\xfd", 8, 7) is None
+    assert g4_decode(b"\xfd", 8) is None
     # absurd column counts
     assert g4_decode(enc, 0, 6) is None
     assert g4_decode(enc, 1 << 20, 6) is None

@@ -272,6 +272,9 @@ def test_flac_crc_and_honest_gates():
     assert decode_flac_samples(b"fLaC") is None
     assert decode_flac_samples(None) is None
     assert decode_flac_samples(b"not flac at all") is None
+    # a wasted-bits count that leaves no sample bits is corrupt
+    body = _streaminfo(8000, 16) + _frame([0] * 16, 0, "verbatim", wasted=16)
+    assert decode_flac_samples(body) is None
 
 
 def test_flac_flows_through_audio_dispatch_and_stats():

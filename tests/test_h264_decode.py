@@ -19,9 +19,11 @@ from data_ingestion_py_spark.sources.h264_decode import (
     _TOTAL_ZEROS,
     _TOTAL_ZEROS_CDC,
     _ZIGZAG,
-    _Bits,
     _residual_block,
     decode_idr_annexb,
+)
+from data_ingestion_py_spark.sources.bits import (
+    BitReader as _Bits,
     ebsp_to_rbsp,
 )
 
@@ -588,6 +590,29 @@ def test_idr_refusals():
         annexb(make_sps(wmb, hmb), b"\x68" + b.bytes(),
                make_idr(wmb, hmb, mbs))
     ) is None
+
+
+def test_idr_uses_first_supported_sps():
+    rng = np.random.RandomState(4)
+    wmb, hmb = 2, 1
+    mbs = [_pcm_mb(rng), _pcm_mb(rng)]
+    # a field-coded SPS, which the decoder cannot use
+    b = _BW()
+    b.u(66, 8); b.u(0, 8); b.u(30, 8)
+    b.ue(0); b.ue(0); b.ue(0); b.ue(0); b.ue(1); b.u(0, 1)
+    b.ue(wmb - 1); b.ue(hmb - 1)
+    b.u(0, 1)  # frame_mbs_only = 0
+    b.u(0, 1)  # mb_adaptive_frame_field
+    b.u(0, 1); b.u(0, 1); b.u(0, 1)
+    b.rbsp_trailing()
+    field_sps = b"\x67" + rbsp_to_ebsp(b.bytes())
+    idr = make_idr(wmb, hmb, mbs)
+    assert decode_idr_annexb(annexb(field_sps, make_pps(), idr)) is None
+    want = decode_idr_annexb(annexb(make_sps(wmb, hmb), make_pps(), idr))
+    got = decode_idr_annexb(
+        annexb(field_sps, make_sps(wmb, hmb), make_pps(), idr)
+    )
+    assert got is not None and (got["y"] == want["y"]).all()
 
 
 def test_i4x4_vertical_horizontal_exact():
